@@ -119,12 +119,7 @@ object AttributeRewrite {
       .select(col("general_id").cast("long"), col("specific_id").cast("long"),
         col("additional_word"))
       .as[(Long, Long, String)]
-    // r6 limit-probe guard: limit(cap+1) bounds the driver collect AT the
-    // cap (an over-size table still fails loudly, and can no longer OOM
-    // the driver the way a passed-count full collect could) while folding
-    // the former count pass into the one collect action (guide §1.2)
-    val rows = attDs.limit((maxBroadcastRows + 1).toInt).collect()
-    require(rows.length <= maxBroadcastRows,
+    val rows = Bounded.collectOrFail(attDs, maxBroadcastRows)(
       s"attribute table has > $maxBroadcastRows rows (broadcast cap)")
     val att: Map[Long, Seq[(String, Long)]] = rows.toSeq
       .groupBy(_._1)

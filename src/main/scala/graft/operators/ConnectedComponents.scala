@@ -2,38 +2,24 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
-/** Transitive closure via alternating large-star / small-star (the public
-  * MapReduce CC algorithm of Kiveris et al., "Connected Components in
-  * MapReduce and Beyond"). Converges in O(log n) rounds — the reference's
-  * recursive NetworkX traversals (`2nd Place/src/snomed_graph.py:212-256`)
-  * re-expressed as iterative Dataset joins, per the north rule.
-  *
-  * Works on string node ids (lexicographic min is the component
-  * representative — deterministic, no 64-bit-hash collision risk).
-  * Each round `localCheckpoint`s to cut lineage (SURVEY §7.4.4).
+import scala.jdk.CollectionConverters._
+
+/** Transitive closure via alternating large-star / small-star (Kiveris et
+  * al., "Connected Components in MapReduce and Beyond"), O(log n) rounds:
+  * the reference's recursive NetworkX traversals
+  * (`2nd Place/src/snomed_graph.py:212-256`) as iterative Dataset joins.
+  * The component label is the min member under Spark's own order.
   *
   * large-star: for each node u, m = min(Γ(u) ∪ {u}); emit (v, m) ∀v ∈ Γ(u), v > u
   * small-star: orient edges to (max, min); m = min(N(u) ∪ {u}) = min N(u);
   *             emit (v, m) ∀v ∈ N(u) \ {m}, plus (u, m)
   *
-  * LOCAL CONTRACTION (round 5): before the star rounds, edges are
-  * range-partitioned by endpoint and each partition is collapsed by an
-  * in-memory union-find into (local root → member) star edges. Connectivity
-  * is preserved exactly (a connected subset is replaced by a star), and the
-  * WHICH-root choice cannot affect the output — the star rounds recompute
-  * the true component minimum over all surviving nodes — so the JVM's
-  * natural ordering is safe even where it diverges from Spark's UTF8
-  * binary collation. On locality-shaped graphs (id-adjacent chains — the
-  * hierarchy/skip-chain workloads), a range partition co-locates whole
-  * component segments and the loop converges in ~1-2 rounds instead of
-  * ~log(diameter): at 1000 executors that removes most of the per-round
-  * stage barriers, the dominant cost of iterated CC at scale. The
-  * contraction replaces (and implicitly performs) the input `distinct`,
-  * so it costs the one exchange that dedup already paid. Per-task memory
-  * is bounded by `ContractCap` union-find entries; past the cap, edges
-  * pass through uncontracted (correctness unaffected).
+  * Before the star rounds each range partition of the edges is collapsed by
+  * an in-memory union-find into (root → member) stars: connectivity is kept
+  * exactly, and on id-adjacent chains whole segments co-locate, so the loop
+  * converges in ~1-2 rounds instead of ~log(diameter).
   */
 object ConnectedComponents {
 
@@ -42,27 +28,16 @@ object ConnectedComponents {
     * the same envelope as Spark's own hash-aggregate maps. */
   private[operators] val ContractCap = 1 << 22
 
-  /** Max edge rows for which the whole component problem is solved by ONE
-    * driver-side union-find instead of the star loop (r6, guide §1.2): the
-    * r5 contraction already ran an in-memory union-find per PARTITION —
-    * when the entire (already-checkpointed) edge set fits the same few-
-    * hundred-MB envelope, running it once over all edges removes every
-    * star round, signature action and assignment shuffle. The probe is a
-    * bounded `limit(cap+1)` collect from the checkpoint cache, so driver
-    * intake can never exceed the cap; beyond it the loop runs unchanged
-    * (fact-scale edge sets — the 100 TB mention graph — keep the
-    * distributed algorithm). */
+  /** Max edges for which the whole problem is one union-find in one task,
+    * with no star round; within the per-task envelope of [[ContractCap]]. */
   private[operators] val LocalSolveCap = 1 << 21
 
-  /** Spark's default StringType collation is UTF8 binary — least/greatest
-    * compare the UTF-8 byte sequences unsigned, which DIVERGES from Java's
-    * UTF-16 `String.compareTo` for supplementary characters. The local
-    * solve must pick the same component representative the star loop
-    * would, so its string ordering replays the byte comparison exactly. */
-  private val Utf8Ordering: Ordering[Any] = new Ordering[Any] {
-    def compare(x: Any, y: Any): Int = {
-      val a = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val b = y.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  /** Spark's default string collation compares UTF-8 bytes unsigned, which
+    * differs from `String.compareTo` for supplementary characters. */
+  private val Utf8Ordering: Ordering[String] = new Ordering[String] {
+    def compare(x: String, y: String): Int = {
+      val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val n = math.min(a.length, b.length)
       var i = 0
       while (i < n) {
@@ -74,62 +49,66 @@ object ConnectedComponents {
     }
   }
 
+  /** An id type with a typed union-find, ordered as Spark orders it, so a
+    * union-find root is the label the star loop converges to. */
+  private final case class IdType[T](enc: Encoder[(T, T)], ord: Ordering[T]) {
+    def contract(ranged: DataFrame): DataFrame = {
+      val (cap, o) = (ContractCap, ord)
+      ranged.as[(T, T)](enc).mapPartitions(it => contractPartition(it, cap)(o))(enc)
+        .toDF("u", "v")
+    }
+
+    /** Every endpoint with its component, solved in one task over the
+      * materialized edges; self-loops register a node only. */
+    def solve(edges: DataFrame): DataFrame = {
+      val o = ord
+      edges.coalesce(1).as[(T, T)](enc).mapPartitions { it =>
+        val es = it.toArray
+        val comp = new java.util.HashMap[T, T]()
+        es.foreach { case (a, b) => comp.put(a, a); comp.put(b, b) }
+        contractPartition(es.iterator, Int.MaxValue)(o).foreach { case (r, k) => comp.put(k, r) }
+        comp.asScala.iterator
+      }(enc).toDF("id", "component")
+    }
+  }
+
+  private def idType(dt: DataType): Option[IdType[_]] = dt match {
+    case LongType => Some(IdType(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), Ordering.Long))
+    case IntegerType => Some(IdType(Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt), Ordering.Int))
+    case StringType => Some(IdType(Encoders.tuple(Encoders.STRING, Encoders.STRING), Utf8Ordering))
+    case _ => None
+  }
+
   /** edges(a, b) → assignment(id, component) for every endpoint. */
   def apply(edgesIn: DataFrame, maxIter: Int = 40,
             localCap: Long = LocalSolveCap)
            (implicit spark: SparkSession): DataFrame = {
-    // materialize the input once: cuts whatever upstream plan produced the
-    // edges (UDF filters, joins) so the iteration joins against a stable
-    // leaf — required for the loop anyway, and avoids re-executing the
-    // upstream pipeline for the nodes scan
-    val edges0 = edgesIn.select(col("a"), col("b")).localCheckpoint()
-
-    // dimension-scale fast path: one driver union-find over the collected
-    // edge set, component = min member under the SAME ordering the loop's
-    // least/greatest would compute (see Utf8Ordering)
-    val idType = edges0.schema.head.dataType
-    val localOrd: Option[Ordering[Any]] = idType match {
-      case LongType => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
-      case IntegerType => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
-      case StringType => Some(Utf8Ordering)
-      case _ => None
+    val ab = edgesIn.select(col("a"), col("b"))
+    val id = idType(ab.schema.head.dataType)
+    val (edges0, small) = Bounded.localGate(ab, if (id.isDefined) localCap else -1)
+    (id, small) match {
+      case (Some(t), Some(_)) => t.solve(edges0)
+      case _ => starLoop(edges0, maxIter)
     }
-    if (localOrd.nonEmpty && localCap > 0) {
-      val rows = edges0.limit((localCap + 1).toInt).collect()
-      if (rows.length <= localCap) {
-        // the checkpointed input is fully consumed — free its blocks now
-        // instead of waiting for GC (matters for repeated-sample benches)
-        edges0.queryExecution.analyzed.foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(false)
-          case _ => ()
-        }
-        return localAssignments(rows, idType, localOrd.get)
-      }
-    }
+  }
 
-    val nodes = edges0.select(col("a").as("id")).toDF("id")
-      .union(edges0.select(col("b").as("id")).toDF("id")).distinct()
-
+  private def starLoop(edges0: DataFrame, maxIter: Int): DataFrame = {
+    val nodes = edges0.select(col("a").as("id"))
+      .union(edges0.select(col("b").as("id"))).distinct()
     val norm = edges0.filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-    // LAZY checkpoint (r6): the signature aggregation right below is the
-    // action that materializes it — one pass (contract + cache + hash)
-    // instead of an eager checkpoint pass plus a separate signature pass,
-    // the same trick the loop already used for its per-round checkpoints.
-    var edges = contractStars(norm, spark)
+    // the contraction replaces the input distinct (duplicate edges are
+    // no-op unions); lazy checkpoints here and per round, materialized by
+    // the signature aggregation: one pass per round, not two
+    val ranged = norm.repartitionByRange(col("u"), col("v"))
+    var edges = idType(norm.schema.head.dataType).fold(norm.distinct())(_.contract(ranged))
       .localCheckpoint(false)
 
     var stable = false
     var iter = 0
     var sig = signature(edges)
     while (!stable && iter < maxIter) {
-      val ls = largeStar(edges)
-      // LAZY localCheckpoint: the signature aggregation below is the one
-      // action that materializes the checkpoint — one pass per round
-      // (compute + cache + aggregate), not a checkpoint pass plus a
-      // separate count+hash pass
-      val ss = smallStar(ls).localCheckpoint(false)
+      val ss = smallStar(largeStar(edges)).localCheckpoint(false)
       val newSig = signature(ss)
       stable = newSig == sig
       sig = newSig
@@ -143,50 +122,6 @@ object ConnectedComponents {
       .groupBy("id").agg(min(col("component")).as("component"))
     nodes.join(assign, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-  }
-
-  /** The whole-graph union-find behind the dimension-scale fast path:
-    * every endpoint becomes a node (self-loops and null-sided rows
-    * register their endpoints but never union — exactly what the loop's
-    * `a =!= b` null-rejecting filter plus the nodes-scan left_outer
-    * coalesce produce), roots are kept at the ordering minimum, and each
-    * node maps to its root — the min member of its component, the same
-    * label the converged star rounds assign. */
-  private def localAssignments(rows: Array[org.apache.spark.sql.Row],
-                               idType: org.apache.spark.sql.types.DataType,
-                               ord: Ordering[Any])
-                              (implicit spark: SparkSession): DataFrame = {
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.get(r) != r) r = parent.get(r)
-      var c = x
-      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
-    }
-    rows.foreach { row =>
-      val a = row.get(0)
-      val b = row.get(1)
-      if (!parent.containsKey(a)) parent.put(a, a)
-      if (!parent.containsKey(b)) parent.put(b, b)
-      if (a != null && b != null && a != b) {
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) {
-          if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](parent.size)
-    val keys = parent.keySet().toArray
-    keys.foreach { k => out += org.apache.spark.sql.Row(k, find(k)) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("component", idType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism, 1 + out.size / 4096))),
-      schema)
   }
 
   private def signature(edges: DataFrame): (Long, String) = {
@@ -212,35 +147,6 @@ object ConnectedComponents {
       .select(least(col("v"), col("m")).as("u"), greatest(col("v"), col("m")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-  }
-
-  /** Partition-local union-find contraction of normalized (u ≤ v) edges.
-    * Range-partitions by endpoint so id-adjacent edges co-locate, then
-    * emits (root → member) star edges per partition (duplicate input edges
-    * collapse as no-op unions — this replaces the former input distinct).
-    * Falls back to a plain distinct for node types without a typed path. */
-  private def contractStars(norm: DataFrame, spark: SparkSession): DataFrame = {
-    val ranged = norm.repartitionByRange(col("u"), col("v"))
-    norm.schema.head.dataType match {
-      case LongType =>
-        contractTyped[Long](ranged, Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      case IntegerType =>
-        contractTyped[Int](ranged, Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt))
-      case StringType =>
-        contractTyped[String](ranged, Encoders.tuple(Encoders.STRING, Encoders.STRING))
-      case _ => norm.distinct()
-    }
-  }
-
-  private def contractTyped[T](ranged: DataFrame, enc: Encoder[(T, T)])
-                              (implicit ord: Ordering[T]): DataFrame = {
-    val cap = ContractCap
-    ranged.as[(T, T)](enc)
-      .mapPartitions(it => contractPartition(it, cap))(enc)
-      .toDF("u", "v")
-      // defensive re-orientation: the loop's invariant is Spark's own
-      // least/greatest; the local root was chosen by JVM ordering
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
   }
 
   /** In-memory union-find over one partition's edges; past `cap` distinct

@@ -537,14 +537,9 @@ object DictTrain {
     val blacklistDs = wordCounts.crossJoin(nDocsDf)
       .filter(col("freq") > lit(13L) * col("n_docs"))
       .select(col("word")).as[String]
-    // r6 limit-probe: words averaging >13 occurrences per doc are a tiny
-    // stop-word-class set by construction; limit(cap+1) keeps the loud
-    // driver-collect cap while folding the former count pass (and its
-    // persist/unpersist bookkeeping) into the one collect action
-    val blWords = blacklistDs.limit(10000001).collect()
-    require(blWords.length <= 10000000,
-      s"permutation blacklist exceeds the 10M driver-collect cap")
-    val permBlacklist = blWords.toSet
+    // words averaging >13 occurrences per doc: a tiny stop-word-class set
+    val permBlacklist = Bounded.collectOrFail(blacklistDs, 10000000)(
+      s"permutation blacklist exceeds the 10M driver-collect cap").toSet
     // persist: the permutation expansion (largest intermediate) has TWO
     // consumers below (the union and the abbreviation join) and would
     // otherwise be computed twice
@@ -588,9 +583,8 @@ object DictTrain {
     // ONE action materializes both caches (computing the union computes —
     // and therefore caches — every partition of both persisted inputs)
     lcOut.toDF().union(ucOut.toDF()).count()
-    // checkpoint blocks live on the RDD, invisible to Dataset.unpersist —
-    // free them explicitly so repeated-sample benches don't accumulate them
-    freeCheckpoints(mentions, harvested, ucNorms, scored, expanded, core, full)
+    // free the checkpoints now, not at GC: repeated runs would pile them up
+    Seq(mentions, harvested, ucNorms, scored, expanded, core, full).foreach(Reuse.release)
     if (docsPersistedHere) docsP.unpersist()
     if (goldsPersistedHere) goldsP.unpersist()
     (lcOut, ucOut)
@@ -687,17 +681,6 @@ object DictTrain {
       .select(col("doc_id"), col("start"), col("end"), col("norm").as("name"), col("section"))
     sectionStatsFlat(mentions.join(golds.toDF(), Seq("doc_id", "start", "end")))
   }
-
-  /** Unpersist the underlying RDD of lazily-localCheckpoint'd frames (the
-    * SQL cache manager never sees those blocks). Only the frame's OWN root
-    * is freed — lineage below it is untouched. */
-  private def freeCheckpoints(dfs: Dataset[_]*): Unit =
-    dfs.foreach { df =>
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ => ()
-      }
-    }
 
   val normalizeUdf = udf((s: String) => TextFns.normalize(s))
 }

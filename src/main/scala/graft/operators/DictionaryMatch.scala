@@ -446,17 +446,10 @@ object DictionaryMatch {
     * path is the blocking+scoring pipeline, not the gazetteer. */
   val MaxBroadcastDictEntries: Long = 20000000L
 
-  private[operators] def collectDict(dict: Dataset[DictEntry]): Array[DictEntry] = {
-    // r6 limit-probe: limit(cap+1) bounds the driver collect AT the cap —
-    // the former count-then-collect paid a second full pass over the dict
-    // derivation per annotate call, and (unlike this form) collected
-    // everything once the count passed (guide §1.2)
-    val rows = dict.limit((MaxBroadcastDictEntries + 1).toInt).collect()
-    require(rows.length <= MaxBroadcastDictEntries,
+  private[operators] def collectDict(dict: Dataset[DictEntry]): Array[DictEntry] =
+    Bounded.collectOrFail(dict, MaxBroadcastDictEntries)(
       s"dictionary has > $MaxBroadcastDictEntries entries (broadcast cap) " +
         "— route beyond-broadcast-scale matching through LinkagePipeline")
-    rows
-  }
 
   def annotate(docs: Dataset[Doc], dict: Dataset[DictEntry],
                maxTokens: Int = 6, minStart: Int = 100,

@@ -1,299 +1,103 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Graph traversal (SURVEY §2.10).
-  *
-  * The reference walks its SNOMED DiGraph recursively in NetworkX
-  * (`2nd Place/src/snomed_graph.py:212-256` get_descendants/get_ancestors).
-  * Terminology/hierarchy graphs are dimension-scale, so the default path
-  * (r6, guide §1.2/§3.1) collects the edge relation once — under the SAME
-  * row cap that formerly gated broadcasting it into every per-round join,
-  * i.e. the identical driver/executor memory envelope — broadcasts the
-  * adjacency, and runs the whole BFS inside ONE narrow job (each task
-  * walks its roots in memory; total work O(answer), exactly the frontier
-  * loop's). This removes the O(depth) driver-round barriers (~7 rounds ×
-  * join+checkpoint+count each) that dominated the graded graph queries. A
-  * fact-scale edge set (> cap) falls back to the iterative frontier-join
-  * loop: each BFS level one equi-join, `localCheckpoint` per round to cut
-  * lineage — the same skeleton as the large-star/small-star clustering.
-  */
+/** Graph traversal (SURVEY §2.10) over (child, parent) edges: the
+  * reference's recursive NetworkX walks (`2nd Place/src/snomed_graph.py:212-320`)
+  * as one BFS. Terminology graphs are dimension-scale, so up to `edgeCap`
+  * edges the BFS runs in one job over a broadcast adjacency instead of
+  * paying the frontier-join loop's driver round trip per level. */
 object Graph {
 
-  /** Max edge-relation rows for which the BFS runs over a collected +
-    * broadcast adjacency (≈ tens of MB built): terminology/hierarchy
-    * graphs fit comfortably; a fact-scale edge set falls back to the
-    * shuffled frontier-join loop. The probe is a bounded `limit(cap + 1)`
-    * collect — driver intake can never exceed the cap. */
+  /** Max edges for the in-memory BFS (≈ tens of MB of adjacency). */
   private val BroadcastEdgeCap = 4000000L
 
-  private val EmptyChildren = Array.empty[Any]
+  private val NoNeighbours = Array.empty[Any]
 
-  /** Bounded collect of a dimension-scale edge relation into an adjacency
-    * map keyed by column `keyIdx` with neighbor column `valIdx`; None when
-    * the relation exceeds `cap` — or contains a NULL endpoint (the
-    * frontier loop's `===` joins are null-rejecting in ways a hash-map
-    * walk is not, so null-bearing graphs take the loop path whose
-    * semantics are the contract) — and the caller falls back. */
-  private def collectAdjacency(e: DataFrame, keyIdx: Int, valIdx: Int, cap: Long)
-      : Option[java.util.HashMap[Any, Array[Any]]] = {
-    if (cap <= 0) return None
-    val rows = e.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length > cap) None
-    else if (rows.exists(r => r.isNullAt(keyIdx) || r.isNullAt(valIdx))) None
-    else {
-      val m = new java.util.HashMap[Any, ArrayBuffer[Any]]()
-      rows.foreach { r =>
-        m.computeIfAbsent(r.get(keyIdx), _ => new ArrayBuffer[Any]()) += r.get(valIdx)
-      }
-      val out = new java.util.HashMap[Any, Array[Any]](math.max(16, m.size * 2))
-      m.forEach((k, v) => out.put(k, v.toArray))
-      Some(out)
-    }
-  }
-
-  /** In-memory BFS from `root`: emits each node at its FIRST-VISIT level —
-    * the min distance, the same invariant the frontier loop's left_anti
-    * novelty encodes (the visited set IS the loop's accumulator for this
-    * root; the root itself is not pre-visited, so a cycle back to it emits
-    * it, exactly as the loop does). Returns (emitted (node, dist) pairs,
-    * the frontier at exit — nonempty iff the walk stopped ON the depth
-    * bound rather than by exhaustion, which is what the truncation guard
-    * probes) plus the visited set for that guard. */
-  private def localBfs(adj: java.util.HashMap[Any, Array[Any]], root: Any,
-                       maxDepth: Int)
-      : (ArrayBuffer[(Any, Int)], ArrayBuffer[Any], java.util.HashSet[Any]) = {
-    val out = new ArrayBuffer[(Any, Int)]()
-    val visited = new java.util.HashSet[Any]()
-    var level = new ArrayBuffer[Any]()
-    adj.getOrDefault(root, EmptyChildren).foreach { c =>
-      if (visited.add(c)) { level += c; out += ((c, 1)) }
-    }
-    var d = 1
-    while (level.nonEmpty && d < maxDepth) {
-      val next = new ArrayBuffer[Any]()
-      level.foreach { n =>
-        adj.getOrDefault(n, EmptyChildren).foreach { c =>
-          if (visited.add(c)) { next += c; out += ((c, d + 1)) }
-        }
-      }
-      level = next
-      d += 1
-    }
-    (out, level, visited)
-  }
-
-  /** One-job distributed BFS over the broadcast adjacency: roots are
-    * deduplicated (the loop path's `roots.distinct()`), each task walks
-    * its roots in memory. `guardDepth` replays shortestPaths'
-    * no-silent-truncation contract executor-side; the result is
-    * materialized eagerly (`localCheckpoint`, mirroring the loop path's
-    * per-round checkpoints) so the guard fires HERE, and a task-wrapped
-    * IllegalArgumentException is re-thrown as itself to keep the
-    * operator's documented failure type. */
-  private def localBfsFrame(adjB: Broadcast[java.util.HashMap[Any, Array[Any]]],
-                            rootsRdd: org.apache.spark.rdd.RDD[Any],
-                            maxDepth: Int, guardDepth: Boolean,
-                            schema: StructType, emitDist: Boolean)
-                           (implicit spark: SparkSession): DataFrame = {
-    val rdd = rootsRdd.mapPartitions { it =>
-      val adj = adjB.value
-      it.flatMap { root =>
-        val (out, lastLevel, visited) = localBfs(adj, root, maxDepth)
-        if (guardDepth && lastLevel.nonEmpty) {
-          val cutOff = lastLevel.exists(n =>
-            adj.getOrDefault(n, EmptyChildren).exists(c => !visited.contains(c)))
-          require(!cutOff,
-            s"shortestPaths: nodes remain beyond maxDist=$maxDepth — the " +
-              "distance table would be silently truncated; raise maxDist")
-        }
-        if (emitDist) out.iterator.map { case (n, d) => Row(root, n, d) }
-        else out.iterator.map { case (n, _) => Row(root, n) }
-      }
-    }
-    val df = spark.createDataFrame(rdd, schema)
-    try df.localCheckpoint(true)
-    catch {
-      case e: Throwable =>
-        var c: Throwable = e
-        while (c != null && !c.isInstanceOf[IllegalArgumentException]) c = c.getCause
-        c match {
-          case iae: IllegalArgumentException => throw iae
-          case _ => throw e
-        }
-    }
-  }
-
-  /** Full ancestor closure: edges (child, parent) → (node, ancestor) pairs
-    * for every node with at least one ancestor.
-    *
-    * Dimension-scale edges (≤ `edgeCap`): one-job local BFS UP the
-    * child→parents adjacency from every distinct child (see object doc).
-    * Fact-scale: frontier-join BFS, O(depth) rounds, novelty per round via
-    * left_anti against the accumulated closure — never a bag-semantics
-    * exceptAll re-shuffle of `acc`; ONE driver action per round (a count
-    * that materializes the lazy checkpoint and answers emptiness), the
-    * accumulator a lazy union of already-checkpointed frontiers.
-    * Pointer-doubling was tried and measured SLOWER here (5.4 s vs 3.8 s
-    * at sf0.1): path-squaring composes all ancestor pairs per node
-    * (quadratic in path count) and re-shuffles the full closure every
-    * round, which loses to frontier BFS whenever depth is modest. */
+  /** (node, anc) for every node with at least one ancestor. Pointer doubling
+    * measured slower than this BFS (5.4 s vs 3.8 s at sf0.1): it composes
+    * all ancestor pairs per node and re-shuffles the closure every round. */
   def ancestorClosure(edges: DataFrame, maxIter: Int = 64,
                       edgeCap: Long = BroadcastEdgeCap)
-                     (implicit spark: SparkSession): DataFrame = {
-    val pe = edges.select(col("child"), col("parent"))
-    collectAdjacency(pe, keyIdx = 0, valIdx = 1, edgeCap) match {
-      case Some(adj) =>
-        val schema = StructType(Seq(
-          StructField("node", pe.schema(0).dataType),
-          StructField("anc", pe.schema(1).dataType)))
-        // roots = every distinct child = exactly the adjacency's key set,
-        // already on the driver — parallelizing it avoids re-running the
-        // upstream edge plan and the roots-distinct exchange; max emitted
-        // depth mirrors the loop (initial frontier at depth 1 + maxIter
-        // expansions)
-        val keys: Array[Any] = adj.keySet.toArray.asInstanceOf[Array[AnyRef]]
-          .map(identity[Any])
-        localBfsFrame(spark.sparkContext.broadcast(adj),
-          spark.sparkContext.parallelize(keys.toIndexedSeq,
-            math.max(1, math.min(spark.sparkContext.defaultParallelism,
-              1 + keys.length / 4096))),
-          maxDepth = maxIter + 1, guardDepth = false,
-          schema, emitDist = false)
-      case None =>
-        val e = pe.localCheckpoint()
-        var frontier = e.select(col("child").as("node"), col("parent").as("anc"))
-          .distinct().localCheckpoint(false)
-        var acc = frontier
-        var iter = 0
-        var done = frontier.count() == 0
-        while (!done && iter < maxIter) {
-          // next level: (node, anc) ⋈ (anc=child, parent) → (node, parent)
-          val next = frontier.join(e, frontier("anc") === e("child"))
-            .select(frontier("node"), e("parent").as("anc"))
-            .distinct()
-            .join(acc, Seq("node", "anc"), "left_anti")
-            .localCheckpoint(false)
-          done = next.count() == 0
-          if (!done) {
-            acc = acc.union(next)
-            frontier = next
-          }
-          iter += 1
-        }
-        acc
-    }
-  }
+                     (implicit spark: SparkSession): DataFrame =
+    bfs(edges.select(col("child"), col("parent")), None, maxIter + 1,
+      emitDist = false, guard = false, edgeCap).toDF("node", "anc")
 
-  /** G2 descendants of `roots`: BFS DOWN the tree from the roots themselves
-    * (reversed edges), so the work is O(answer), never the full closure
-    * filtered after the fact — on a deep 100×-scale DAG the full closure is
-    * O(V·depth) rows to answer a question about a few roots. Same
-    * dimension-scale local path / fact-scale frontier loop as
-    * [[ancestorClosure]]. */
+  /** (root, descendant): BFS down from the roots themselves, O(answer)
+    * rather than the full closure filtered afterwards. */
   def descendants(edges: DataFrame, roots: DataFrame, maxIter: Int = 64,
                   edgeCap: Long = BroadcastEdgeCap)
-                 (implicit spark: SparkSession): DataFrame = {
-    val pe = edges.select(col("child"), col("parent"))
-    // local path only when the roots column has exactly the edge-endpoint
-    // type: the loop's `===` join inserts implicit numeric promotions a
-    // boxed-value hash probe cannot reproduce, so mixed-type calls keep
-    // the loop semantics
-    val r = roots.select(col("root"))
-    val cap = if (r.schema(0).dataType == pe.schema(1).dataType) edgeCap else 0L
-    collectAdjacency(pe, keyIdx = 1, valIdx = 0, cap) match {
-      case Some(adj) =>
-        val schema = StructType(Seq(
-          StructField("root", r.schema(0).dataType),
-          StructField("descendant", pe.schema(0).dataType)))
-        localBfsFrame(spark.sparkContext.broadcast(adj),
-          r.distinct().rdd.map(_.get(0)),
-          maxDepth = maxIter + 1, guardDepth = false, schema, emitDist = false)
-      case None =>
-        val e = pe.localCheckpoint()
-        val r = roots.select(col("root")).distinct()
-        var frontier = e.join(r, e("parent") === r("root"))
-          .select(col("root"), col("child").as("descendant"))
-          .distinct().localCheckpoint(false)
-        var acc = frontier
-        var iter = 0
-        var done = frontier.count() == 0
-        while (!done && iter < maxIter) {
-          val next = frontier.join(e, frontier("descendant") === e("parent"))
-            .select(frontier("root"), e("child").as("descendant"))
-            .distinct()
-            .join(acc, Seq("root", "descendant"), "left_anti")
-            .localCheckpoint(false)
-          done = next.count() == 0
-          if (!done) {
-            acc = acc.union(next)
-            frontier = next
-          }
-          iter += 1
-        }
-        acc
-    }
-  }
+                 (implicit spark: SparkSession): DataFrame =
+    bfs(edges.select(col("parent"), col("child")), Some(roots.select(col("root"))),
+      maxIter + 1, emitDist = false, guard = false, edgeCap).toDF("root", "descendant")
 
-  /** G3 shortest-path distances: min directed hop count from each root in
-    * `roots(root)` to every reachable node, as (root, node, dist).
-    *
-    * The reference answers path queries with `nx.shortest_path` over its
-    * DiGraph (`2nd Place/src/snomed_graph.py:284-320` find_path, which BFS's
-    * sctid1→sctid2 and falls back to the reverse direction); here the first
-    * level a node is reached at IS its min distance, so the visited set
-    * (local path) / left_anti novelty (loop path) doubles as the min() and
-    * no per-node relaxation state is needed. */
+  /** (root, node, dist): min directed hop count from each root (`find_path`,
+    * `snomed_graph.py:284-320`). Fails loudly rather than truncate at
+    * `maxDist`, because the table must match the unbounded recursive CTE. */
   def shortestPaths(edges: DataFrame, roots: DataFrame, maxDist: Int = 64,
                     edgeCap: Long = BroadcastEdgeCap)
                    (implicit spark: SparkSession): DataFrame =
-    bfsDistances(edges, roots, maxDist, truncateOk = false, edgeCap)
+    bfs(edges.select(col("parent"), col("child")), Some(roots.select(col("root"))),
+      maxDist, emitDist = true, guard = true, edgeCap).toDF("root", "node", "dist")
 
-  /** Shared BFS core. `truncateOk = false` FAILS LOUDLY when nodes beyond
-    * maxDist were actually cut off — a silently truncated distance table
-    * would diverge from the unbounded recursive-CTE oracle and
-    * under-report reachability (no-silent-caps). A non-empty frontier AT
-    * maxDist is fine as long as it has no unseen successors (the deepest
-    * node sitting exactly on the bound is a complete result), so the check
-    * probes one expansion past the bound instead of frontier emptiness.
-    * `truncateOk = true` is the semantic k-hop bound of
-    * [[neighbourhood]]. */
-  private def bfsDistances(edges: DataFrame, roots: DataFrame, maxDist: Int,
-                           truncateOk: Boolean, edgeCap: Long)
-                          (implicit spark: SparkSession): DataFrame = {
-    val pe = edges.select(col("child"), col("parent"))
-    // same root/endpoint type-parity gate as `descendants`
-    val r = roots.select(col("root"))
-    val cap = if (r.schema(0).dataType == pe.schema(1).dataType) edgeCap else 0L
-    collectAdjacency(pe, keyIdx = 1, valIdx = 0, cap) match {
-      case Some(adj) =>
-        val schema = StructType(Seq(
-          StructField("root", r.schema(0).dataType),
-          StructField("node", pe.schema(0).dataType),
-          StructField("dist", IntegerType, nullable = false)))
-        localBfsFrame(spark.sparkContext.broadcast(adj),
-          r.distinct().rdd.map(_.get(0)),
-          maxDepth = maxDist, guardDepth = !truncateOk, schema, emitDist = true)
+  /** (root, node, dist) within `steps` UNDIRECTED hops, root excluded
+    * (`get_neighbourhood`, `snomed_graph.py:258-282`). The reference also
+    * drops its global root concept; callers filter `node` for that. */
+  def neighbourhood(edges: DataFrame, roots: DataFrame, steps: Int,
+                    edgeCap: Long = BroadcastEdgeCap)
+                   (implicit spark: SparkSession): DataFrame = {
+    require(steps > 0, "neighbourhood: steps must be > 0")
+    val sym = edges.select(col("child"), col("parent"))
+      .union(edges.select(col("parent"), col("child")))
+    bfs(sym, Some(roots.select(col("root"))), steps, emitDist = true, guard = false,
+      edgeCap).toDF("root", "node", "dist").filter(col("node") =!= col("root"))
+  }
+
+  /** G4: isolate removal — nodes that appear in no edge. */
+  def removeIsolates(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val endpoints = edges.select(col("child").as("id"))
+      .union(edges.select(col("parent").as("id"))).distinct()
+    nodes.join(endpoints, Seq("id"), "left_semi")
+  }
+
+  /** BFS along two-column (src, dst) edges from each root (every src when
+    * `roots` is None) to (root, node, dist), emitting each node at its
+    * first-visit level, which is its min distance; the first level is always
+    * expanded. The root is not pre-visited, so a cycle back to it emits it.
+    * `guard` fails when the depth bound cut nodes off; a node exactly on the
+    * bound with no unseen successor is a complete answer. */
+  private def bfs(edges: DataFrame, roots: Option[DataFrame], maxDepth: Int,
+                  emitDist: Boolean, guard: Boolean, edgeCap: Long)
+                 (implicit spark: SparkSession): DataFrame = {
+    val depth = math.max(maxDepth, 1)
+    val r = roots.map(_.toDF("root"))
+    val (e, small) = Bounded.localGate(edges.toDF("src", "dst"), edgeCap,
+      r.map(_.schema.head.dataType))
+    val out = small match {
+      case Some(rows) =>
+        val starts = r.getOrElse(e.select(col("src").as("root"))).distinct()
+        val walked = walkAll(rows, starts, e.schema(1).dataType, depth, guard)
+        Reuse.release(e)
+        walked
       case None =>
-        val e = pe.localCheckpoint()
-        val r = roots.select(col("root")).distinct()
-        // dist 1: direct children of each root (root→node via parent→child)
-        var frontier = e.join(r, e("parent") === r("root"))
-          .select(col("root"), col("child").as("node"), lit(1).as("dist"))
-          .distinct().localCheckpoint(false)
+        def expand(f: DataFrame) = f.join(e, f("node") === e("src"))
+          .select(f("root"), e("dst").as("node"), (f("dist") + 1).as("dist"))
+        val first = r.fold(e.select(col("src").as("root"), col("dst").as("node"),
+          lit(1).as("dist"))) { rs =>
+          expand(rs.distinct().select(col("root"), col("root").as("node"), lit(0).as("dist")))
+        }
+        var frontier = first.distinct().localCheckpoint(false)
         var acc = frontier
         var d = 1
+        // one driver action per level: the count materializes the lazy
+        // checkpoint and answers emptiness
         var done = frontier.count() == 0
-        while (!done && d < maxDist) {
-          val next = frontier.join(e, frontier("node") === e("parent"))
-            .select(frontier("root"), e("child").as("node"),
-              (frontier("dist") + 1).as("dist"))
-            .distinct()
+        while (!done && d < depth) {
+          val next = expand(frontier).distinct()
             .join(acc, Seq("root", "node"), "left_anti")
             .localCheckpoint(false)
           done = next.count() == 0
@@ -303,40 +107,62 @@ object Graph {
           }
           d += 1
         }
-        if (!done && !truncateOk) {
-          val cutOff = !frontier.join(e, frontier("node") === e("parent"))
-            .select(frontier("root"), e("child").as("node"))
-            .join(acc, Seq("root", "node"), "left_anti")
-            .isEmpty
-          require(!cutOff,
-            s"shortestPaths: nodes remain beyond maxDist=$maxDist — the " +
-              "distance table would be silently truncated; raise maxDist")
-        }
+        require(done || !guard ||
+          expand(frontier).join(acc, Seq("root", "node"), "left_anti").isEmpty,
+          truncated(depth))
         acc
+    }
+    if (emitDist) out else out.drop("dist")
+  }
+
+  private def truncated(depth: Int): String =
+    s"shortestPaths: nodes remain beyond maxDist=$depth — the distance table " +
+      "would be silently truncated; raise maxDist"
+
+  /** The in-memory BFS of every root in `starts`, in one job over the
+    * broadcast adjacency of `rows`. Materialized eagerly so the guard fires
+    * here, re-thrown as the IllegalArgumentException the loop raises. */
+  private def walkAll(rows: Array[Row], starts: DataFrame, nodeType: DataType,
+                      depth: Int, guard: Boolean)
+                     (implicit spark: SparkSession): DataFrame = {
+    val built = new java.util.HashMap[Any, ArrayBuffer[Any]]()
+    rows.foreach(r => built.computeIfAbsent(r.get(0), _ => ArrayBuffer.empty[Any]) += r.get(1))
+    val adj = new java.util.HashMap[Any, Array[Any]](math.max(16, built.size * 2))
+    built.forEach((k, v) => adj.put(k, v.toArray))
+    val adjB = spark.sparkContext.broadcast(adj)
+    val schema = StructType(Seq(starts.schema.head,
+      StructField("node", nodeType), StructField("dist", IntegerType, nullable = false)))
+    val out = starts.mapPartitions { it =>
+      val a = adjB.value
+      it.flatMap { s =>
+        val root = s.get(0)
+        walk(a, root, depth, guard).iterator.map { case (n, d) => Row(root, n, d) }
+      }
+    }(Encoders.row(schema))
+    try out.localCheckpoint()
+    catch {
+      case e: Throwable =>
+        throw Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case iae: IllegalArgumentException => iae }.getOrElse(e)
     }
   }
 
-  /** G3 neighbourhood: every node within `steps` UNDIRECTED hops of each
-    * root, excluding the root itself, as (root, node, dist) with dist the
-    * min undirected hop count (`2nd Place/src/snomed_graph.py:258-282`
-    * get_neighbourhood recurses over parents ∪ children). Same BFS as
-    * [[shortestPaths]] over the symmetrized edge set; the reference also
-    * drops its global root concept — callers exclude domain roots by
-    * filtering `node` before/after. */
-  def neighbourhood(edges: DataFrame, roots: DataFrame, steps: Int,
-                    edgeCap: Long = BroadcastEdgeCap)
-                   (implicit spark: SparkSession): DataFrame = {
-    require(steps > 0, "neighbourhood: steps must be > 0")
-    val sym = edges.select(col("child"), col("parent"))
-      .union(edges.select(col("parent").as("child"), col("child").as("parent")))
-    bfsDistances(sym, roots, maxDist = steps, truncateOk = true, edgeCap)
-      .filter(col("node") =!= col("root"))
-  }
-
-  /** G4: isolate removal — nodes that appear in no edge. */
-  def removeIsolates(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val endpoints = edges.select(col("child").as("id"))
-      .union(edges.select(col("parent").as("id"))).distinct()
-    nodes.join(endpoints, Seq("id"), "left_semi")
+  private def walk(adj: java.util.HashMap[Any, Array[Any]], root: Any, depth: Int,
+                   guard: Boolean): ArrayBuffer[(Any, Int)] = {
+    val out = new ArrayBuffer[(Any, Int)]()
+    val visited = new java.util.HashSet[Any]()
+    var level = ArrayBuffer(root)
+    var d = 0
+    while (level.nonEmpty && d < depth) {
+      val next = new ArrayBuffer[Any]()
+      level.foreach(n => adj.getOrDefault(n, NoNeighbours).foreach { c =>
+        if (visited.add(c)) { next += c; out += ((c, d + 1)) }
+      })
+      level = next
+      d += 1
+    }
+    require(!guard || level.forall(n =>
+      adj.getOrDefault(n, NoNeighbours).forall(visited.contains)), truncated(depth))
+    out
   }
 }

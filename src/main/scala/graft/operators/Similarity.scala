@@ -74,10 +74,7 @@ object Similarity {
     val cls = classCol.map(col).getOrElse(lit(0))
     val rows = emb.select(col("vec_id"), col("embedding"), cls.cast("int").as("cls"))
       .as[(Long, Seq[Float], Int)]
-    // r6 limit-probe: one bounded collect instead of count-then-collect
-    // (the count paid a second full pass; the limit caps driver intake)
-    val collected = rows.limit((maxBroadcastRows + 1).toInt).collect()
-    require(collected.length <= maxBroadcastRows,
+    val collected = Bounded.collectOrFail(rows, maxBroadcastRows)(
       s"bruteForceTopK collects the DB to the driver: > cap " +
         s"$maxBroadcastRows rows — use lshTopK for beyond-broadcast-scale databases")
     // per-class DB: the reference holds one matrix per concept class

@@ -33,25 +33,12 @@ object LinkagePipeline {
                     keyFreq: DataFrame,     // (key, freq) skew report
                     nodeKeys: DataFrame = null, // (id, key) node-level keys (keyFreq's input)
                     persisted: Seq[DataFrame] = Seq.empty) {
-    /** Release every DataFrame `run` cached — call once the outputs are
-      * materialized (or when evicting a memoized Result). Handles both
-      * persisted frames (unpersist) and lazily localCheckpoint'd frames,
-      * whose blocks live on the underlying RDD rather than in the SQL
-      * cache manager — those are freed by unpersisting the LogicalRDD
-      * leaves directly (otherwise they linger until GC, which matters for
-      * the repeated-sample bench protocol at ladder scale). */
+    /** Release every frame `run` cached or checkpointed — call once the
+      * outputs are materialized (or when evicting a memoized Result). Every
+      * checkpoint `run` creates is tracked individually in `persisted`. */
     def release(): Unit = persisted.foreach { df =>
       df.unpersist()
-      // only the frame's OWN root checkpoint is freed — walking the whole
-      // lineage would also unpersist LogicalRDD leaves the Result does not
-      // own (e.g. a caller-provided checkpointed mentions frame reachable
-      // through scored's plan); every checkpoint run() creates is tracked
-      // individually in `persisted`, so root-only covers them all
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-        case _ => ()
-      }
+      Reuse.release(df)
     }
   }
 
@@ -110,32 +97,6 @@ object LinkagePipeline {
     d.select(concat(lit("t:"), col("mention")).as("a"),
       concat(lit("c:"), col("concept_id")).as("b"))
 
-  /** OPT-IN uniform spread of candidate pairs ahead of the CPU-heavy
-    * scoring stage: `repartition(4 × shuffle parallelism, hash(a, b))`.
-    * Scoring cost is per-ROW (Levenshtein is O(|a|·|b|)) with zero
-    * locality requirement — the argmax aggregate reshuffles by `a` anyway
-    * — so hashing on the near-unique pair itself is the uniform
-    * distribution, and the explicit partition count keeps AQE from
-    * coalescing a cheap-to-shuffle/expensive-to-compute exchange into few
-    * fat tasks.
-    *
-    * NOT in the default plan, by measurement (400k docs, local[16], same
-    * session): the shipped fused join→score→cache stage ran 105-132 s;
-    * inserting this spread made it 176-199 s — the extra full exchange of
-    * the norm-carrying pair rows costs more on a memory-bound host than
-    * the residual post-salting skew it insures against (AQE skew-join
-    * splitting plus `Blocking`'s frequency cap + salted replication
-    * already bound the reducer sizes). Reach for it when a corpus's key
-    * distribution defeats the cap+salt envelope — the observed failure
-    * mode (one reduce partition running 350+ s of single-threaded
-    * Levenshtein while 15 threads idle) appears when scoring is fused
-    * with an UN-materialized argmax chain; see the `persistScored`
-    * scaladoc on `run`. */
-  private[graft] def scoringSpread(pairs: DataFrame)
-                                  (implicit spark: SparkSession): DataFrame =
-    pairs.repartition(spark.sessionState.conf.numShufflePartitions * 4,
-      col("a"), col("b"))
-
   /** Per-surface argmax link edge (see `run` scaladoc). Hash-aggregated
     * `min_by` on (−score, b) instead of a row_number window: identical
     * output (threshold-first commutes with argmax — the best candidate
@@ -192,7 +153,7 @@ object LinkagePipeline {
     // non-scaling cost in the bench
     // r6 second session: the multi-consumer frames below are cached via
     // LAZY localCheckpoint instead of persist — same storage level, same
-    // one-evaluation guarantee, but each boundary presents a LogicalRDD
+    // one-evaluation guarantee, but each boundary presents a checkpoint
     // leaf to everything above it, so the ~10 downstream actions plan
     // against small trees instead of re-analyzing the full cached lineage
     // (the dict_train lesson: the formatted plan shrank >100x and the

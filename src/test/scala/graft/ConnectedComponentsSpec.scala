@@ -116,6 +116,16 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     val l2 = ConnectedComponents(lEdges, localCap = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l1 == l2 && l1(500L) == 500L)
+    // the largest cap, Int a / Long b ids, NULL endpoints, an empty edge set
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.toList).toSet
+    def sameAtMaxCap(e: org.apache.spark.sql.DataFrame): Unit =
+      assert(rows(ConnectedComponents(e, localCap = Int.MaxValue)) ==
+        rows(ConnectedComponents(e, localCap = 0)))
+    sameAtMaxCap(lEdges)
+    sameAtMaxCap(Seq((1, 2L), (2, 3L), (9, 9L), (7, 8L)).toDF("a", "b"))
+    sameAtMaxCap(Seq((Some("a"), Some("b")), (None, Some("b")), (Some("c"), None))
+      .toDF("a", "b"))
+    sameAtMaxCap(Seq.empty[(Long, Long)].toDF("a", "b"))
   }
 
   test("contraction cap overflow passes edges through with connectivity intact") {

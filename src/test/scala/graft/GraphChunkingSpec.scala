@@ -38,6 +38,23 @@ class GraphChunkingSpec extends AnyFunSuite with SparkTestBase {
       pairs(Graph.shortestPaths(edges, roots, edgeCap = 0)))
     assert(pairs(Graph.neighbourhood(edges, roots, steps = 2)) ==
       pairs(Graph.neighbourhood(edges, roots, steps = 2, edgeCap = 0)))
+    // the same agreement at the largest cap, on mixed Int child / Long
+    // parent ids, NULL endpoints and an empty edge set
+    def sameAtMaxCap(edges: org.apache.spark.sql.DataFrame,
+                     roots: org.apache.spark.sql.DataFrame): Unit = {
+      val ops: Seq[Long => org.apache.spark.sql.DataFrame] = Seq(
+        c => Graph.ancestorClosure(edges, edgeCap = c),
+        c => Graph.descendants(edges, roots, edgeCap = c),
+        c => Graph.shortestPaths(edges, roots, edgeCap = c),
+        c => Graph.neighbourhood(edges, roots, steps = 2, edgeCap = c))
+      for (op <- ops) assert(pairs(op(Int.MaxValue)) == pairs(op(0)))
+    }
+    sameAtMaxCap(edges, roots)
+    sameAtMaxCap(Seq((2, 1L), (3, 1L), (4, 2L), (5, 2L), (6, 3L), (7, 5L), (7, 4L), (1, 7L))
+      .toDF("child", "parent"), roots)
+    sameAtMaxCap(Seq((Some(2L), Some(1L)), (None, Some(2L)), (Some(3L), None),
+      (Some(4L), Some(2L))).toDF("child", "parent"), Seq(1L, 2L).toDF("root"))
+    sameAtMaxCap(Seq.empty[(Long, Long)].toDF("child", "parent"), roots)
     // the cycle reaches the root itself: (1, 1) must be in the closure
     assert(pairs(Graph.ancestorClosure(edges)).contains(List(1L, 1L)))
     // the loud maxDist truncation guard fires identically on BOTH paths

@@ -104,6 +104,9 @@ class MetricsSpec extends AnyFunSuite with SparkTestBase {
     assert(r.getDouble(1) == 0.5)  // acc@5
     assert(r.getDouble(2) == 0.5)  // acc@10: rank 11 still out
     assert(r.getDouble(3) == 1.0)  // full list: both hit
+    // empty gt and pred: no duplicates, nothing aligned
+    val none = Metrics.alignAccuracy(gt.limit(0), pred.limit(0)).head()
+    assert(none.isNullAt(0))
   }
 
   test("pairwise F1 symmetric and correct on small sets") {
