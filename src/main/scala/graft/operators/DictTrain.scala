@@ -261,19 +261,13 @@ object DictTrain {
     // before the two-pointer walk (docs with no golds still score their
     // predictions −1; gold-only or empty docs still emit nothing). Pinned
     // by the inputs-only dict_train oracle and DictTrainSpec.
-    val (dictMap, firstTokens) =
-      DictionaryMatch.dictStructures(DictionaryMatch.collectDict(dict))
-    val dmB = spark.sparkContext.broadcast(dictMap)
-    val ftB = spark.sparkContext.broadcast(firstTokens)
+    val m = DictionaryMatch.matcher(Some(dict), None, maxTokens = 6, minStart = 100)
     docs.map(d => (d.doc_id, d.text)).groupByKey(_._1)
       .cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
         dIt.toSeq.headOption match {
           case None => Iterator.empty
           case Some((_, text)) =>
-            val anns = DictionaryMatch
-              .matchDoc(docId, text, maxTokens = 6, minStart = 100,
-                dmB.value, ftB.value)
-              .toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
+            val anns = m(docId, text).toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
             val refs = gIt.toIndexedSeq.sortBy(r => (r.start, r.end, r.concept_id))
             scoreDocPredictions(refs, anns).iterator
               .map { case (a, s) => (docId, a.section, a.dict_entry, s) }

@@ -42,13 +42,15 @@ object DictionaryMatch {
   /** One candidate doc n-gram (guards already applied in-row). */
   case class Cand(doc_id: String, start: Int, end: Int, key: String, section: String)
 
-  /** Hashed candidate — the production path. */
-  case class CandH(doc_id: String, start: Int, end: Int, key_hash: Long, section: String)
+  /** A token is destemmed (and admitted as a 1-token plural) when it is
+    * longer than 3 chars and ends in `s` of either case — the same rule in
+    * `matchDoc` and in the SQL replay. */
+  private def plural(tok: String): Boolean =
+    tok.length > 3 && Character.toLowerCase(tok.charAt(tok.length - 1)) == 's'
 
   /** REFERENCE-ORACLE string-key candidate generation: readable
     * transcription of the guards, used by the differential tests that pin
-    * `candidateHashes` to it. Allocates a string per n-gram — production
-    * uses `candidateHashes`. */
+    * `matchDoc` to it. Allocates a string per n-gram. */
   def candidates(docId: String, text: String, maxTokens: Int, minStart: Int,
                  firstTokens: java.util.Set[String] = null,
                  caseSensitive: Boolean = false): Seq[Cand] = {
@@ -63,8 +65,7 @@ object DictionaryMatch {
       val start = toks(i)._2
       val tok0 = toks(i)._1
       val prefixOk = firstTokens == null || firstTokens.contains(tok0) ||
-        (tok0.length > 3 && tok0.endsWith("s") &&
-          firstTokens.contains(tok0.substring(0, tok0.length - 1))) // 1-token plural
+        (plural(tok0) && firstTokens.contains(tok0.substring(0, tok0.length - 1)))
       if (start >= minStart && prefixOk) {
         // advance header-line cursor (token starts are increasing)
         while (hlIdx < headerLines.length && headerLines(hlIdx)._2 <= start) hlIdx += 1
@@ -81,8 +82,7 @@ object DictionaryMatch {
               val end = toks(j)._3
               val key = sb.toString
               out += Cand(docId, start, end, key, section)
-              val last = toks(j)._1
-              if (last.length > 3 && last.endsWith("s"))
+              if (plural(toks(j)._1))
                 out += Cand(docId, start, end,
                   key.substring(0, key.length - 1), section)
               j += 1
@@ -95,221 +95,31 @@ object DictionaryMatch {
     out.result()
   }
 
-  /** Production candidate generation: identical guards and key semantics to
-    * `candidates`, but keys are rolling 64-bit hashes
-    * (`TextFns.fingerprint64` of the would-be key string, computed
-    * incrementally) — no substring, no StringBuilder, no boxed lookups.
-    * `firstTokens` holds fingerprint64 hashes of dictionary first tokens. */
-  def candidateHashes(docId: String, text: String, maxTokens: Int, minStart: Int,
-                      firstTokens: LongHashSet = null,
-                      caseSensitive: Boolean = false): Seq[CandH] = {
-    val n = text.length
-    // token bounds, one pass, no substrings
-    var nTok = 0
-    var p = 0
-    while (p < n) {
-      if (Character.isLetterOrDigit(text.charAt(p))) {
-        nTok += 1
-        while (p < n && Character.isLetterOrDigit(text.charAt(p))) p += 1
-      } else p += 1
-    }
-    if (nTok == 0) return Seq.empty
-    val tStart = new Array[Int](nTok)
-    val tEnd = new Array[Int](nTok)
-    var t = 0
-    p = 0
-    while (p < n) {
-      if (Character.isLetterOrDigit(text.charAt(p))) {
-        tStart(t) = p
-        while (p < n && Character.isLetterOrDigit(text.charAt(p))) p += 1
-        tEnd(t) = p
-        t += 1
-      } else p += 1
-    }
-    @inline def ch(idx: Int): Char = {
-      val c = text.charAt(idx)
-      if (caseSensitive) c else Character.toLowerCase(c)
-    }
-    val Seed = 1125899906842597L // fingerprint64's seed
-    // hash of one whole token
-    @inline def tokenHash(ti: Int): Long = {
-      var h = Seed
-      var k = tStart(ti)
-      while (k < tEnd(ti)) { h = 31 * h + ch(k); k += 1 }
-      h
-    }
-    val secs = Sectioning.sections(docId, text)
-    val headerLines = Sectioning.headerLineRanges(text)
-    var hlIdx = 0
-    val out = Seq.newBuilder[CandH]
-    var i = 0
-    while (i < nTok) {
-      val start = tStart(i)
-      if (start >= minStart) {
-        val len0 = tEnd(i) - tStart(i)
-        val lastLower0 = Character.toLowerCase(text.charAt(tEnd(i) - 1))
-        val prefixOk = firstTokens == null || {
-          val f0 = tokenHash(i)
-          firstTokens.contains(f0) || {
-            // 1-token plural: hash of the token minus its trailing 's'
-            len0 > 3 && lastLower0 == 's' && {
-              var h = Seed
-              var k = tStart(i)
-              while (k < tEnd(i) - 1) { h = 31 * h + ch(k); k += 1 }
-              firstTokens.contains(h)
-            }
-          }
-        }
-        if (prefixOk) {
-          while (hlIdx < headerLines.length && headerLines(hlIdx)._2 <= start) hlIdx += 1
-          val inHeader = hlIdx < headerLines.length &&
-            headerLines(hlIdx)._1 <= start && start < headerLines(hlIdx)._2
-          if (!inHeader) {
-            val section = Sectioning.sectionAt(secs, start)
-            if (!Sectioning.isVetoSection(section)) {
-              var h = Seed
-              var j = i
-              while (j < nTok && j - i < maxTokens) {
-                if (j > i) h = 31 * h + ' '
-                var hBeforeLast = h
-                var k = tStart(j)
-                val e = tEnd(j)
-                while (k < e) { hBeforeLast = h; h = 31 * h + ch(k); k += 1 }
-                out += CandH(docId, start, e, h, section)
-                if (e - tStart(j) > 3 && Character.toLowerCase(text.charAt(e - 1)) == 's')
-                  out += CandH(docId, start, e, hBeforeLast, section)
-                j += 1
-              }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    out.result()
-  }
-
   /** One dictionary payload row in the fused matcher's broadcast map. */
   final case class DictHit(section: String, mention: String, conceptId: Long)
 
-  /** Fused per-doc matcher: candidateHashes' exact guard/key semantics with
-    * the broadcast-hash-join PROBE inlined — only MATCHING n-grams allocate
-    * anything (an Annotation). A non-matching candidate costs a rolling
-    * hash + one open-addressing probe: zero allocation. This is what keeps
-    * the stage scaling with cores instead of saturating the allocator
-    * (the measured 32-thread ceiling): at ~2k candidates/doc and ~15
-    * hits/doc it is ~100× less garbage than materializing candidate rows
-    * into a Catalyst join. */
-  def matchDoc(docId: String, text: String, maxTokens: Int, minStart: Int,
-               dictMap: LongKeyMap[Array[DictHit]],
-               firstTokens: LongHashSet,
-               caseSensitive: Boolean = false): Seq[Annotation] = {
-    val n = text.length
-    var nTok = 0
-    var p = 0
-    while (p < n) {
-      if (Character.isLetterOrDigit(text.charAt(p))) {
-        nTok += 1
-        while (p < n && Character.isLetterOrDigit(text.charAt(p))) p += 1
-      } else p += 1
-    }
-    if (nTok == 0) return Seq.empty
-    val tStart = new Array[Int](nTok)
-    val tEnd = new Array[Int](nTok)
-    var t = 0
-    p = 0
-    while (p < n) {
-      if (Character.isLetterOrDigit(text.charAt(p))) {
-        tStart(t) = p
-        while (p < n && Character.isLetterOrDigit(text.charAt(p))) p += 1
-        tEnd(t) = p
-        t += 1
-      } else p += 1
-    }
-    @inline def ch(idx: Int): Char = {
-      val c = text.charAt(idx)
-      if (caseSensitive) c else Character.toLowerCase(c)
-    }
-    val Seed = 1125899906842597L
-    @inline def tokenHash(ti: Int): Long = {
-      var h = Seed
-      var k = tStart(ti)
-      while (k < tEnd(ti)) { h = 31 * h + ch(k); k += 1 }
-      h
-    }
-    val secs = Sectioning.sections(docId, text)
-    val headerLines = Sectioning.headerLineRanges(text)
-    var hlIdx = 0
-    val out = Seq.newBuilder[Annotation]
-    @inline def probe(h: Long, start: Int, end: Int, section: String): Unit = {
-      val hits = dictMap.get(h)
-      if (hits != null) {
-        var x = 0
-        while (x < hits.length) {
-          val e = hits(x)
-          if (e.section == "any" || e.section == section)
-            out += Annotation(docId, start, end, e.conceptId, e.section, e.mention)
-          x += 1
-        }
-      }
-    }
-    var i = 0
-    while (i < nTok) {
-      val start = tStart(i)
-      if (start >= minStart) {
-        val len0 = tEnd(i) - tStart(i)
-        val lastLower0 = Character.toLowerCase(text.charAt(tEnd(i) - 1))
-        val prefixOk = firstTokens == null || {
-          val f0 = tokenHash(i)
-          firstTokens.contains(f0) || {
-            len0 > 3 && lastLower0 == 's' && {
-              var h = Seed
-              var k = tStart(i)
-              while (k < tEnd(i) - 1) { h = 31 * h + ch(k); k += 1 }
-              firstTokens.contains(h)
-            }
-          }
-        }
-        if (prefixOk) {
-          while (hlIdx < headerLines.length && headerLines(hlIdx)._2 <= start) hlIdx += 1
-          val inHeader = hlIdx < headerLines.length &&
-            headerLines(hlIdx)._1 <= start && start < headerLines(hlIdx)._2
-          if (!inHeader) {
-            val section = Sectioning.sectionAt(secs, start)
-            if (!Sectioning.isVetoSection(section)) {
-              var h = Seed
-              var j = i
-              while (j < nTok && j - i < maxTokens) {
-                if (j > i) h = 31 * h + ' '
-                var hBeforeLast = h
-                var k = tStart(j)
-                val e = tEnd(j)
-                while (k < e) { hBeforeLast = h; h = 31 * h + ch(k); k += 1 }
-                probe(h, start, e, section)
-                if (e - tStart(j) > 3 && Character.toLowerCase(text.charAt(e - 1)) == 's')
-                  probe(hBeforeLast, start, e, section)
-                j += 1
-              }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    out.result()
-  }
+  /** One dictionary's probe side: n-gram key hash (`TextFns.fingerprint64`
+    * of the mention) → hits, and the hashes of the mentions' first tokens. */
+  final case class DictSide(hits: LongKeyMap[Array[DictHit]], firstTokens: LongHashSet)
 
-  /** DUAL-dict fused matcher: ONE token scan of the doc probing BOTH the
-    * lowercase dictionary (case-folded rolling hash) and the case-sensitive
-    * uppercase dictionary (case-preserved rolling hash). Semantically
-    * identical to running `matchDoc` twice (caseSensitive = false/true) and
-    * concatenating — the uc probe is just a second rolling hash over the
-    * same token bounds, so the doc is tokenized, sectioned and
-    * header-scanned ONCE instead of twice (the round-2 `linkage_annotate`
-    * cost was exactly this duplication, VERDICT r2 §wrong-3). */
-  def matchDocDual(docId: String, text: String, maxTokens: Int, minStart: Int,
-                   lcMap: LongKeyMap[Array[DictHit]], lcFirst: LongHashSet,
-                   ucMap: LongKeyMap[Array[DictHit]], ucFirst: LongHashSet): Seq[Annotation] = {
+  /** The gazetteer scan kernel: ONE token scan of the doc probing a
+    * lowercase side (case-folded rolling hash) and a case-sensitive side
+    * (case-preserved rolling hash) — the reference's two dictionary passes
+    * (`mimic_predict.py:31-49`) over one tokenization, sectioning and
+    * header scan. A single-dictionary pass puts its dictionary on one side
+    * and `NoDict` on the other. A side hashes only the n-grams of start
+    * tokens its first-token filter admits, so an empty side costs nothing.
+    *
+    * Keys are the would-be `candidates` key strings' fingerprints, computed
+    * incrementally over the token chars; the broadcast-hash-join PROBE is
+    * inlined, so only MATCHING n-grams allocate anything (an Annotation). A
+    * non-matching candidate costs a rolling hash + one open-addressing
+    * probe: zero allocation. This is what keeps the stage scaling with
+    * cores instead of saturating the allocator (the measured 32-thread
+    * ceiling): at ~2k candidates/doc and ~15 hits/doc it is ~100× less
+    * garbage than materializing candidate rows into a Catalyst join. */
+  def matchDoc(docId: String, text: String, maxTokens: Int, minStart: Int,
+               lc: DictSide, uc: DictSide): Seq[Annotation] = {
     val n = text.length
     var nTok = 0
     var p = 0
@@ -332,30 +142,33 @@ object DictionaryMatch {
         t += 1
       } else p += 1
     }
-    val Seed = 1125899906842597L
+    val Seed = 1125899906842597L // TextFns.fingerprint64's seed
     // case-folded / case-preserved hash of one whole token, optionally
     // dropping the last char (the 1-token plural destem)
-    @inline def tokenHashLc(ti: Int, dropLast: Int): Long = {
+    @inline def tokenHash(ti: Int, dropLast: Int, fold: Boolean): Long = {
       var h = Seed
       var k = tStart(ti)
       val e = tEnd(ti) - dropLast
-      while (k < e) { h = 31 * h + Character.toLowerCase(text.charAt(k)); k += 1 }
+      while (k < e) {
+        val c = text.charAt(k)
+        h = 31 * h + (if (fold) Character.toLowerCase(c) else c)
+        k += 1
+      }
       h
     }
-    @inline def tokenHashUc(ti: Int, dropLast: Int): Long = {
-      var h = Seed
-      var k = tStart(ti)
-      val e = tEnd(ti) - dropLast
-      while (k < e) { h = 31 * h + text.charAt(k); k += 1 }
-      h
+    @inline def admits(side: DictSide, ti: Int, destem: Boolean, fold: Boolean): Boolean = {
+      val ft = side.firstTokens
+      ft.size > 0 && (ft.contains(tokenHash(ti, 0, fold)) ||
+        (destem && ft.contains(tokenHash(ti, 1, fold))))
     }
+    @inline def endsInS(e: Int, len: Int): Boolean =
+      len > 3 && Character.toLowerCase(text.charAt(e - 1)) == 's'
     val secs = Sectioning.sections(docId, text)
     val headerLines = Sectioning.headerLineRanges(text)
     var hlIdx = 0
     val out = Seq.newBuilder[Annotation]
-    @inline def probe(m: LongKeyMap[Array[DictHit]], h: Long,
-                      start: Int, end: Int, section: String): Unit = {
-      val hits = m.get(h)
+    @inline def probe(side: DictSide, h: Long, start: Int, end: Int, section: String): Unit = {
+      val hits = side.hits.get(h)
       if (hits != null) {
         var x = 0
         while (x < hits.length) {
@@ -370,13 +183,9 @@ object DictionaryMatch {
     while (i < nTok) {
       val start = tStart(i)
       if (start >= minStart) {
-        val len0 = tEnd(i) - tStart(i)
-        val plural0 = len0 > 3 && Character.toLowerCase(text.charAt(tEnd(i) - 1)) == 's'
-        // per-side prefix admission — identical to each single pass's filter
-        val lcOk = lcFirst == null || lcFirst.contains(tokenHashLc(i, 0)) ||
-          (plural0 && lcFirst.contains(tokenHashLc(i, 1)))
-        val ucOk = ucFirst == null || ucFirst.contains(tokenHashUc(i, 0)) ||
-          (plural0 && ucFirst.contains(tokenHashUc(i, 1)))
+        val plural0 = endsInS(tEnd(i), tEnd(i) - start)
+        val lcOk = admits(lc, i, plural0, fold = true)
+        val ucOk = admits(uc, i, plural0, fold = false)
         if (lcOk || ucOk) {
           while (hlIdx < headerLines.length && headerLines(hlIdx)._2 <= start) hlIdx += 1
           val inHeader = hlIdx < headerLines.length &&
@@ -394,17 +203,16 @@ object DictionaryMatch {
                 var k = tStart(j)
                 val e = tEnd(j)
                 while (k < e) {
-                  hLcPrev = hLc; hUcPrev = hUc
                   val c = text.charAt(k)
-                  hLc = 31 * hLc + Character.toLowerCase(c)
-                  hUc = 31 * hUc + c
+                  if (lcOk) { hLcPrev = hLc; hLc = 31 * hLc + Character.toLowerCase(c) }
+                  if (ucOk) { hUcPrev = hUc; hUc = 31 * hUc + c }
                   k += 1
                 }
-                if (lcOk) probe(lcMap, hLc, start, e, section)
-                if (ucOk) probe(ucMap, hUc, start, e, section)
-                if (e - tStart(j) > 3 && Character.toLowerCase(text.charAt(e - 1)) == 's') {
-                  if (lcOk) probe(lcMap, hLcPrev, start, e, section)
-                  if (ucOk) probe(ucMap, hUcPrev, start, e, section)
+                if (lcOk) probe(lc, hLc, start, e, section)
+                if (ucOk) probe(uc, hUc, start, e, section)
+                if (endsInS(e, e - tStart(j))) {
+                  if (lcOk) probe(lc, hLcPrev, start, e, section)
+                  if (ucOk) probe(uc, hUcPrev, start, e, section)
                 }
                 j += 1
               }
@@ -417,10 +225,10 @@ object DictionaryMatch {
     out.result()
   }
 
-  /** Build the broadcastable (hash → entries) map + first-token filter from
-    * a dictionary (which is broadcast-scale by assumption). Hit arrays are
-    * sorted (section, mention, concept) so match emission order is pinned. */
-  def dictStructures(entries: Array[DictEntry]): (LongKeyMap[Array[DictHit]], LongHashSet) = {
+  /** Build the broadcastable probe side from a dictionary (which is
+    * broadcast-scale by assumption). Hit arrays are sorted
+    * (section, mention, concept) so match emission order is pinned. */
+  def dictStructures(entries: Array[DictEntry]): DictSide = {
     val byHash = entries.groupBy(e => TextFns.fingerprint64(e.mention))
     val m = new LongKeyMap[Array[DictHit]](byHash.size)
     byHash.foreach { case (h, es) =>
@@ -432,14 +240,12 @@ object DictionaryMatch {
       val cut = e.mention.indexOf(' ')
       ft.add(TextFns.fingerprint64(if (cut < 0) e.mention else e.mention.substring(0, cut)))
     }
-    (m, ft)
+    DictSide(m, ft)
   }
 
-  /** Distributed gazetteer annotation: docs → fused broadcast-hash probe
-    * (`matchDoc`). Result spans still overlap — feed through
-    * OverlapResolve. `caseSensitive=true` runs the uc-dict pass: dict
-    * mentions are matched against case-PRESERVED doc n-grams (dict entries
-    * must then carry the exact-cased mention, e.g. "THE"). */
+  /** The side of a single-dictionary pass that has no dictionary. */
+  val NoDict: DictSide = dictStructures(Array.empty)
+
   /** Explicit driver-collect cap: the gazetteer design ASSUMES a
     * broadcast-scale dictionary (the reference's is ~1M entries). Beyond
     * this, fail loudly instead of OOMing the driver — the beyond-broadcast
@@ -451,16 +257,38 @@ object DictionaryMatch {
       s"dictionary has > $MaxBroadcastDictEntries entries (broadcast cap) " +
         "— route beyond-broadcast-scale matching through LinkagePipeline")
 
+  /** `matchDoc` over the lc and uc dictionaries, collected to the driver
+    * and broadcast together once; an absent side is `NoDict`. */
+  private[operators] def matcher(lc: Option[Dataset[DictEntry]], uc: Option[Dataset[DictEntry]],
+                                 maxTokens: Int, minStart: Int)
+                                (implicit spark: SparkSession): (String, String) => Seq[Annotation] = {
+    def side(d: Option[Dataset[DictEntry]]) = d.fold(NoDict)(d => dictStructures(collectDict(d)))
+    val sides = spark.sparkContext.broadcast((side(lc), side(uc)))
+    (docId, text) => {
+      val (lcSide, ucSide) = sides.value
+      matchDoc(docId, text, maxTokens, minStart, lcSide, ucSide)
+    }
+  }
+
+  /** A single-dictionary `matcher`: `caseSensitive=true` runs the uc-dict
+    * pass — dict mentions are matched against case-PRESERVED doc n-grams
+    * (dict entries must then carry the exact-cased mention, e.g. "THE"). */
+  private def matcher(dict: Dataset[DictEntry], caseSensitive: Boolean,
+                      maxTokens: Int, minStart: Int)
+                     (implicit spark: SparkSession): (String, String) => Seq[Annotation] =
+    if (caseSensitive) matcher(None, Some(dict), maxTokens, minStart)
+    else matcher(Some(dict), None, maxTokens, minStart)
+
+  /** Distributed gazetteer annotation: docs → fused broadcast-hash probe
+    * (`matchDoc`). Result spans still overlap — feed through
+    * OverlapResolve. */
   def annotate(docs: Dataset[Doc], dict: Dataset[DictEntry],
                maxTokens: Int = 6, minStart: Int = 100,
                caseSensitive: Boolean = false)
               (implicit spark: SparkSession): Dataset[Annotation] = {
     import spark.implicits._
-    val (dictMap, firstTokens) = dictStructures(collectDict(dict))
-    val dmB = spark.sparkContext.broadcast(dictMap)
-    val ftB = spark.sparkContext.broadcast(firstTokens)
-    docs.flatMap(d =>
-      matchDoc(d.doc_id, d.text, maxTokens, minStart, dmB.value, ftB.value, caseSensitive))
+    val m = matcher(dict, caseSensitive, maxTokens, minStart)
+    docs.flatMap(d => m(d.doc_id, d.text))
   }
 
   /** Same fused annotation over a flat (doc_id, text) table — the shape an
@@ -471,12 +299,8 @@ object DictionaryMatch {
                    caseSensitive: Boolean = false)
                   (implicit spark: SparkSession): Dataset[Annotation] = {
     import spark.implicits._
-    val (dictMap, firstTokens) = dictStructures(collectDict(dict))
-    val dmB = spark.sparkContext.broadcast(dictMap)
-    val ftB = spark.sparkContext.broadcast(firstTokens)
-    docs.flatMap { case (id, text) =>
-      matchDoc(id, text, maxTokens, minStart, dmB.value, ftB.value, caseSensitive)
-    }
+    val m = matcher(dict, caseSensitive, maxTokens, minStart)
+    docs.flatMap { case (id, text) => m(id, text) }
   }
 
   /** Fused single-dict annotate + per-doc overlap resolution in ONE narrow
@@ -492,38 +316,26 @@ object DictionaryMatch {
                            caseSensitive: Boolean = false)
                           (implicit spark: SparkSession): Dataset[Annotation] = {
     import spark.implicits._
-    val (dictMap, firstTokens) = dictStructures(collectDict(dict))
-    val dmB = spark.sparkContext.broadcast(dictMap)
-    val ftB = spark.sparkContext.broadcast(firstTokens)
-    docs.flatMap { case (id, text) =>
-      OverlapResolve.removeOverlaps(
-        matchDoc(id, text, maxTokens, minStart, dmB.value, ftB.value, caseSensitive))
-    }
+    val m = matcher(dict, caseSensitive, maxTokens, minStart)
+    docs.flatMap { case (id, text) => OverlapResolve.removeOverlaps(m(id, text)) }
   }
 
   /** Fused two-dict inference: lc + uc matching AND per-doc overlap
     * resolution in a single narrow flatMap — the whole 1st-place inference
     * (`mimic_predict.py:31-49` + join_predictions) becomes ONE doc pass
     * with ZERO shuffles: all of a doc's annotations are produced by the
-    * same `matchDocDual` call, so `OverlapResolve.removeOverlaps` (a pure
+    * same `matchDoc` call, so `OverlapResolve.removeOverlaps` (a pure
     * per-doc function) runs in-row instead of behind a groupBy-on-doc_id
     * shuffle. Output is identical to
     * joinPredictions(annotate(lc), annotate(uc, caseSensitive=true)) —
-    * pinned by the differential in DictionaryMatchSpec. */
+    * pinned by the differential in UcDictSpec. */
   def annotateDualResolved(docs: Dataset[Doc],
                            lcDict: Dataset[DictEntry], ucDict: Dataset[DictEntry],
                            maxTokens: Int = 6, minStart: Int = 100)
                           (implicit spark: SparkSession): Dataset[Annotation] = {
     import spark.implicits._
-    val (lcMap, lcFt) = dictStructures(collectDict(lcDict))
-    val (ucMap, ucFt) = dictStructures(collectDict(ucDict))
-    val lcMapB = spark.sparkContext.broadcast(lcMap)
-    val lcFtB = spark.sparkContext.broadcast(lcFt)
-    val ucMapB = spark.sparkContext.broadcast(ucMap)
-    val ucFtB = spark.sparkContext.broadcast(ucFt)
-    docs.flatMap(d => OverlapResolve.removeOverlaps(
-      matchDocDual(d.doc_id, d.text, maxTokens, minStart,
-        lcMapB.value, lcFtB.value, ucMapB.value, ucFtB.value)))
+    val m = matcher(Some(lcDict), Some(ucDict), maxTokens, minStart)
+    docs.flatMap(d => OverlapResolve.removeOverlaps(m(d.doc_id, d.text)))
   }
 
   /** Max token length of any dictionary term — drives candidate n-gram depth. */

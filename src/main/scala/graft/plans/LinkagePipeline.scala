@@ -126,24 +126,9 @@ object LinkagePipeline {
         coalesce(col("component"), concat(lit("s:"), col("norm"))).as("component"))
   }
 
-  /** @param persistScored cache the scored-pairs table (the pipeline's
-    *   largest intermediate). Keep true (the default) even when the caller
-    *   never reads `Result.scored`: the cache boundary is a materialization
-    *   point that pins the expensive scoring expressions (Levenshtein + JW +
-    *   ngram-cosine) to exactly ONE evaluation per pair. Without it the
-    *   argmax consumer's filter (`score >= 0.5`) and `min_by` sort key
-    *   (`-score`) each re-derive the score from the raw norms — they sit in
-    *   different operators, and codegen's common-subexpression elimination
-    *   does not span operator boundaries — and the measured effect is not a
-    *   constant factor but a cliff: the 400k-doc ladder job went 105 s →
-    *   440-590 s at local[16] un-persisted (stack dumps showed executor
-    *   threads re-running `levenshteinDistance` inside the downstream
-    *   stages). The flag exists for callers that substitute their OWN
-    *   materialization boundary (e.g. `runCheckpointed`, where the scored
-    *   stage commits to parquet). */
   def run(mentions: Dataset[Mention], dict: Dataset[DictEntry],
           weights: PairwiseScoring.Weights = PairwiseScoring.Weights(),
-          hotKeyCap: Int = 1000, persistScored: Boolean = true)
+          hotKeyCap: Int = 1000)
          (implicit spark: SparkSession): Result = {
     import org.apache.spark.storage.StorageLevel
     val d = unambiguousDict(dict)
@@ -172,10 +157,12 @@ object LinkagePipeline {
     val pairs = Blocking.candidatePairsBipartite(
       keysN.filter(col("id").startsWith("s:")),
       keysN.filter(col("id").startsWith("t:")), hotKeyCap)
-    val scoredBase = PairwiseScoring.scoreInline(pairs, weights)
-    val scored =
-      if (persistScored) scoredBase.persist(StorageLevel.MEMORY_AND_DISK)
-      else scoredBase
+    // the cache pins the scoring expressions to ONE evaluation per pair:
+    // without it the argmax filter and `min_by` sort key each re-derive the
+    // score (no CSE across operators) — 400k docs went 105 s → 440-590 s at
+    // local[16]. Pinned by LinkageF1Spec's scored-plan test.
+    val scored = PairwiseScoring.scoreInline(pairs, weights)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // Linking edges use BEST-CANDIDATE semantics (the reference's top-k →
     // threshold → pick-best shape, `2nd Place/submission/infer.py:184-232`,
     // `3rd Place/src/snomedctentitylinking.py:603-646`): each surface keeps
@@ -226,8 +213,7 @@ object LinkagePipeline {
       .select(col("id"), col("key"))
       .localCheckpoint(false)
     Result(assignments, scored, mentionKeys, keyFreq, nodeKeys = keys,
-      persisted = Seq(nodes, keysN, components, mentionKeys, assignments) ++
-        (if (persistScored) Seq(scored) else Nil))
+      persisted = Seq(nodes, keysN, components, mentionKeys, assignments, scored))
   }
 
   /** Checkpoint-resumable variant: every stage commits to `workDir` through

@@ -342,8 +342,8 @@ object LinkageQueries {
        |  UNION ALL
        |  SELECT norm, ${foldSql("xor(poly, CAST(359069 AS UBIGINT))", graft.functions.TextFns.XsMul1)} FROM ${p}sp)""".stripMargin
 
-  /** Full SQL replay of the flagship inference path — matchDocDual + the
-    * greedy overlap resolve — over exported docs + dictionaries:
+  /** Full SQL replay of the flagship inference path — two-side `matchDoc`
+    * + the greedy overlap resolve — over exported docs + dictionaries:
     * line/segment offset arithmetic (window prefix sums), sectioning with
     * the gazetteer/other mapping and ASOF as-of lookup, header-line veto,
     * token n-grams ≤ 6 with last-token destem, per-section dict joins, and

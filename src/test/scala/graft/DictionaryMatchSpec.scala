@@ -47,49 +47,42 @@ class DictionaryMatchSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("hashed candidates are exactly the string candidates' fingerprints") {
-    import graft.functions.LongHashSet
-    val firstTokens: java.util.Set[String] = {
-      val s = new java.util.HashSet[String]()
-      dict.foreach { e =>
-        val cut = e.mention.indexOf(' ')
-        s.add(if (cut < 0) e.mention else e.mention.substring(0, cut))
-      }
-      s
-    }
-    val ftHashes = {
-      val s = new LongHashSet(firstTokens.size())
-      firstTokens.forEach(t => s.add(TextFns.fingerprint64(t)))
-      s
-    }
-    for (d <- docs.take(15); cs <- Seq(false, true)) {
-      val strCands = DictionaryMatch
-        .candidates(d.doc_id, d.text, 4, 100, firstTokens, cs)
-        .map(c => (c.start, c.end, TextFns.fingerprint64(c.key), c.section))
-      val hashCands = DictionaryMatch
-        .candidateHashes(d.doc_id, d.text, 4, 100, ftHashes, cs)
-        .map(c => (c.start, c.end, c.key_hash, c.section))
-      assert(hashCands == strCands, s"divergence in ${d.doc_id} cs=$cs")
-    }
-  }
-
   test("fused matchDoc equals string-candidates joined with the dict") {
-    val (dictMap, ftHashes) = DictionaryMatch.dictStructures(dict.toArray)
-    val byKey = dict.groupBy(_.mention)
-    for (d <- docs.take(15)) {
-      val fused = DictionaryMatch
-        .matchDoc(d.doc_id, d.text, 4, 100, dictMap, ftHashes)
-        .map(a => (a.start, a.end, a.concept_id, a.section, a.dict_entry)).toSet
-      val joined = DictionaryMatch
-        .candidates(d.doc_id, d.text, 4, 100)
-        .flatMap { c =>
-          byKey.getOrElse(c.key, Seq.empty).collect {
-            case e if e.section == "any" || e.section == c.section =>
-              (c.start, c.end, e.concept_id, e.section, e.mention)
-          }
-        }.toSet
-      assert(fused == joined, s"divergence in ${d.doc_id}")
+    type Hit = (Int, Int, Long, String, String)
+    // reference: string candidates equi-joined with the dict on the key
+    def joined(id: String, text: String, cs: Boolean, entries: Seq[DictEntry]): Seq[Hit] = {
+      val byKey = entries.groupBy(_.mention)
+      DictionaryMatch.candidates(id, text, 4, 100, caseSensitive = cs).flatMap { c =>
+        byKey.getOrElse(c.key, Seq.empty).collect {
+          case e if e.section == "any" || e.section == c.section =>
+            (c.start, c.end, e.concept_id, e.section, e.mention)
+        }
+      }
     }
+    // an uppercase plural ("ABGS") destems to the uc entry "ABG"
+    val uc = Synth.ucDictionary(nConcepts) :+ DictEntry("any", "ABG", 999999L)
+    val pad = "word " * 25
+    val edge = Seq(
+      "e-empty" -> "",
+      "e-punct" -> ".;, -- !? " * 20,
+      "e-early" -> "ABGS and ABG were drawn; chest pains",
+      "e-plural" -> (pad + "ABGS were drawn, then ABG again; abgs and Abgs too"))
+    val inputs = docs.take(15).map(d => d.doc_id -> d.text) ++ edge
+    val dicts = Seq("lc" -> dict, "uc" -> uc, "empty" -> Seq.empty[DictEntry])
+    val sides = dicts.map { case (name, es) => name -> DictionaryMatch.dictStructures(es.toArray) }.toMap
+    // every dict on either side, incl. an empty side: the lc side equals the
+    // case-folded reference, the uc side the case-sensitive one
+    for ((id, text) <- inputs; (lcName, lcEs) <- dicts; (ucName, ucEs) <- dicts) {
+      val fused = DictionaryMatch
+        .matchDoc(id, text, 4, 100, sides(lcName), sides(ucName))
+        .map(a => (a.start, a.end, a.concept_id, a.section, a.dict_entry))
+      val expected = joined(id, text, cs = false, lcEs) ++ joined(id, text, cs = true, ucEs)
+      assert(fused.sorted == expected.sorted, s"divergence in $id lc=$lcName uc=$ucName")
+    }
+    val plural = DictionaryMatch.matchDoc("e-plural", edge.last._2, 4, 100,
+      DictionaryMatch.NoDict, sides("uc"))
+    assert(plural.map(a => (a.start, a.end, a.dict_entry)) ==
+      Seq((125, 129, "ABG"), (147, 150, "ABG")))
   }
 
   test("gazetteer match finds planted exact/permutation/plural mentions") {

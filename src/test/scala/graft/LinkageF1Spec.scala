@@ -5,6 +5,8 @@ import graft.fixtures.Synth
 import graft.model._
 import graft.operators.Blocking
 import graft.plans.LinkagePipeline
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Levenshtein
 import org.apache.spark.sql.functions._
 
 /** The north-rule correctness gate: pairwise F1 ≥ 0.99 on labeled mention
@@ -84,6 +86,29 @@ class LinkageF1Spec extends AnyFunSuite with SparkTestBase {
     val live = spark.sparkContext.getPersistentRDDs.keySet
     val leaked = ckptIds.filter(live.contains)
     assert(leaked.isEmpty, s"release() left checkpoint blocks cached: $leaked")
+  }
+
+  test("the scored cache keeps the scoring expressions out of the argmax plan") {
+    val r = LinkagePipeline.run(LinkagePipeline.mentionsFromSpans(docs, golds), dict)
+    // un-materialized scoring over a real (non-local) source, so the
+    // optimizer cannot constant-fold it into a LocalTableScan
+    val pairs = spark.range(100)
+      .select(concat(lit("s:n"), col("id")).as("a"),
+        concat(lit("t:n"), col("id") + 1).as("b"),
+        concat(lit("n"), col("id")).as("norm_a"),
+        concat(lit("n"), col("id") + 1).as("norm_b"))
+    val inline = graft.operators.PairwiseScoring.scoreInline(pairs)
+    // Levenshtein calls the argmax plan's own operators evaluate (a cache
+    // scan is a leaf: the cached plan is not walked)
+    def levenshteins(scored: DataFrame): Int =
+      LinkagePipeline.argmaxEdges(scored).queryExecution.sparkPlan.collect { case p =>
+        p.expressions.map(_.collect { case l: Levenshtein => l }.size).sum
+      }.sum
+    // without the boundary the filter and the projection each re-derive the score
+    val (cached, unmaterialized) = (levenshteins(r.scored), levenshteins(inline))
+    info(s"Levenshtein calls in the argmax plan: cached $cached, inline $unmaterialized")
+    assert(cached < unmaterialized)
+    r.release()
   }
 
   test("no component merges two distinct concepts") {
